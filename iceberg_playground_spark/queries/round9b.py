@@ -117,7 +117,7 @@ FROM a3 ORDER BY vec_id
 
 
 # Input-cache threshold for the shared quantized frame (bytes of the
-# source parquet; env-overridable like tables._BOUNDS_DRIVER_MAX).
+# source parquet, summed over its files when it is a directory).
 # Multi-pass TRAIN consumers (c54/c70/c74, inherited by c72/c77) pass
 # cache=True unconditionally — with the round-17 repartition the
 # checkpoint wins at every scale (the round-16 rejection measured a
@@ -128,20 +128,25 @@ FROM a3 ORDER BY vec_id
 # risk (stage retry, speculative re-run) makes materialization the
 # safe default. Default 256 MB: every shipped SF stays below it
 # (sf0.1 embeddings = 0.8 MB), a deployment-scale corpus is far above.
-_QDF_CACHE_MIN_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_QDF_CACHE_MIN_BYTES", str(256 * 1024 * 1024)
-    )
-)
+_QDF_CACHE_MIN_BYTES = 256 * 1024 * 1024
 
 
 def _qdf_source_bytes(sf: str) -> int:
-    """On-disk size of the embeddings source (0 when unreadable —
-    e.g. a non-file URI — which keeps the cache off, the safe side)."""
+    """On-disk size of the embeddings source: the file itself, or the
+    sum of every file under a directory dataset (a directory's own
+    size is its inode's, not its data's). 0 when unreadable — e.g. a
+    non-file URI — which keeps the cache off, the safe side."""
     from iceberg_playground_spark.session import table_path
 
+    path = table_path(sf, "embeddings")
     try:
-        return os.path.getsize(table_path(sf, "embeddings"))
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        return sum(
+            os.path.getsize(os.path.join(root, fn))
+            for root, _dirs, fns in os.walk(path)
+            for fn in fns
+        )
     except OSError:
         return 0
 

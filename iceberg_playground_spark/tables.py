@@ -29,11 +29,13 @@ on plain parquet + an atomic JSON snapshot log:
   is exactly what the streaming sink (queries/streaming.py) uses per
   micro-batch epoch.
 
-Concurrency note (scale posture): optimistic commit via atomic rename —
-if the next version already exists the committer re-reads HEAD and
-retries, the same CAS loop Iceberg's catalog performs (and the conflict
-the reference dodges by having ONE committer; comment at
-decouple.rs:22-24).
+Concurrency note (scale posture): every table version is minted by
+ONE primitive, `LakeTable._publish` — optimistic commit via atomic
+create-if-absent of the next version's file. If the next version
+already exists the committer re-reads HEAD and retries, the same CAS
+loop Iceberg's catalog performs (and the conflict the reference dodges
+by having ONE committer; comment at decouple.rs:22-24); a commit pinned
+to the HEAD it read refuses with CommitConflict instead.
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,12 +56,26 @@ _DATA_DIR = "data"
 
 # Commits at or below this many files read their parquet footers on
 # the driver (metadata-sized work, see _collect_bounds_many); larger
-# commits fan the footer reads out as one Spark job. Overridable for
-# deployments where even small commits should stay off the driver.
-_BOUNDS_DRIVER_MAX = int(
-    os.environ.get("SPARK_GRAFT_BOUNDS_DRIVER_MAX", "64")
-)
+# commits fan the footer reads out as one Spark job.
+_BOUNDS_DRIVER_MAX = 64
 _DELETE_DIR = "deletes"
+
+
+def _create_exclusive(path: str, text: str) -> bool:
+    """Atomically create ``path`` holding ``text`` unless it already
+    exists: write a temp file, then ``os.link`` it into place (atomic
+    on POSIX, and it never overwrites). Returns False when another
+    writer got there first. The temp file is removed either way."""
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
 
 
 def _make_bounds_task():
@@ -233,8 +250,6 @@ class LakeCatalog:
         return t
 
     def drop_table(self, ns: str, name: str) -> None:
-        import shutil
-
         root = self.table_path(ns, name)
         if os.path.isdir(root):
             shutil.rmtree(root)
@@ -262,8 +277,8 @@ class LakeTable:
         self.renames: list[dict] = meta.get("renames", [])
 
     # -- named refs (Iceberg tags) ------------------------------------------
-    # One FILE PER TAG under refs/, created with the same os.link CAS
-    # the snapshot log uses (_commit): creation is atomic, and tag
+    # One FILE PER TAG under refs/, created with _create_exclusive (the
+    # CAS the snapshot log uses): creation is atomic, and tag
     # immutability is enforced by the filesystem itself (a second
     # create of the same name hits FileExistsError), so two racing
     # create_tag calls can never silently lose one — the failure mode
@@ -302,27 +317,20 @@ class LakeTable:
         immutable (re-tagging an existing name is an error, like
         Iceberg's CREATE TAG) and PIN their snapshot against
         expire_snapshots — the retention rule that makes audit/repro
-        refs safe to rely on. Atomic via os.link CAS (one file per tag,
-        the _commit pattern); after linking, the snapshot's continued
-        existence is re-verified so a create racing expire_snapshots
-        rolls back with an error instead of leaving a dangling ref
-        (expire re-reads tags just before unlinking snapshots, so the
-        two checks close on each other; see expire_snapshots)."""
+        refs safe to rely on. After the atomic create, the snapshot's
+        continued existence is re-verified so a create racing
+        expire_snapshots rolls back with an error instead of leaving a
+        dangling ref (expire re-reads tags just before unlinking
+        snapshots, so the two checks close on each other; see
+        expire_snapshots)."""
         v = self.current_version() if version is None else version
         target = self._ref_file(name)
         if v not in self.versions():
             raise ValueError(f"cannot tag uncommitted version v{v}")
-        tmp = target + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"version": v}, f)
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
+        if not _create_exclusive(target, json.dumps({"version": v})):
             raise ValueError(
                 f"tag exists: {name} -> v{self.tags().get(name)}"
-            ) from None
-        finally:
-            os.unlink(tmp)
+            )
         if v not in self.versions():  # expire won the race: roll back
             os.unlink(target)
             raise ValueError(f"version v{v} expired while tagging")
@@ -425,9 +433,8 @@ class LakeTable:
         """Append to the branch lineage: files stage exactly like a
         main append (parallel parquet write), but the commit is a
         branch-local entry — main's snapshot log and HEAD are
-        untouched. Entry ordering uses the same os.link CAS as
-        _commit, so concurrent branch writers serialize. Returns the
-        entry index."""
+        untouched. Concurrent branch writers serialize on the entry
+        slot. Returns the entry index."""
         d = self._branch_dir(name)
         if not os.path.isdir(d):
             raise ValueError(f"no such branch: {name}")
@@ -438,17 +445,9 @@ class LakeTable:
                 [f for f in os.listdir(d)
                  if f.startswith("e") and f.endswith(".json")]
             )
-            target = os.path.join(d, f"e{n:06d}.json")
-            tmp = target + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(body)
-            try:
-                os.link(tmp, target)
+            if _create_exclusive(os.path.join(d, f"e{n:06d}.json"), body):
                 return n
-            except FileExistsError:
-                continue  # lost the slot race; renumber and retry
-            finally:
-                os.unlink(tmp)
+            # lost the slot race; renumber and retry
         raise CommitConflict(f"branch append lost 50 races in {d}")
 
     def read_branch(self, name: str) -> DataFrame:
@@ -506,8 +505,6 @@ class LakeTable:
         expire_snapshots' orphan grace reclaims them later (never
         immediately — the same staged-but-uncommitted protection the
         BatchedCommitter relies on)."""
-        import shutil
-
         d = self._branch_dir(name)
         if not os.path.isdir(d):
             raise KeyError(name)
@@ -536,6 +533,57 @@ class LakeTable:
         with open(self._snap_file(version)) as f:
             return json.load(f)
 
+    def _publish(
+        self,
+        build: Callable[[int, dict], dict],
+        base: int | None = None,
+        retries: int = 5,
+        op: str = "commit",
+        on_lost: Callable[[], None] | None = None,
+    ) -> dict:
+        """The ONE place a table version is minted. Reads HEAD, calls
+        ``build(head, snap)`` for the new entry's ``ddl``,
+        ``data_files``, ``delete_files`` and ``summary``, stamps
+        ``version``/``parent``/``ts`` and makes the entry visible with
+        an atomic create-if-absent of the next version's file.
+
+        A lost race re-reads HEAD and calls ``build`` again (after
+        ``on_lost()``, which reclaims that attempt's side effects), up
+        to ``retries`` attempts. A commit pinned to ``base`` must land
+        exactly on it — a replace replayed on a newer HEAD would erase
+        concurrent data, a fast-forward would silently merge divergent
+        histories — so a moved HEAD or a lost race raises
+        CommitConflict instead. Returns the published entry."""
+        for _ in range(retries):
+            head = self.current_version()
+            if base is not None and head != base:
+                raise CommitConflict(
+                    f"{op} read v{base} but HEAD is now v{head} in "
+                    f"{self.root}: concurrent commit; re-read and retry"
+                )
+            body = build(head, self.snapshot(head))
+            entry = {
+                "version": head + 1,
+                "parent": head,
+                "ts": time.time(),  # commit wall time (AS OF TIMESTAMP)
+                "ddl": body["ddl"],  # the schema this snapshot serves
+                "data_files": body["data_files"],
+                "delete_files": body["delete_files"],
+                "summary": body["summary"],
+            }
+            if _create_exclusive(
+                self._snap_file(head + 1), json.dumps(entry)
+            ):
+                return entry
+            if on_lost is not None:
+                on_lost()
+            if base is not None:
+                raise CommitConflict(
+                    f"{op} read v{base} but v{base + 1} landed "
+                    f"concurrently in {self.root}: re-read and retry"
+                )
+        raise CommitConflict(f"{op} lost {retries} races in {self.root}")
+
     def _commit(
         self,
         data_files: list[str],
@@ -546,39 +594,31 @@ class LakeTable:
         base: int | None = None,
         ddl: str | None = None,
     ) -> int:
-        """Optimistic snapshot commit: write-temp + atomic rename; on a
-        version collision, re-read HEAD and retry (Iceberg-style CAS).
-        ``replace=True`` commits the given file set INSTEAD of extending
-        the parent's (rewrite/compaction semantics). A replace MUST pass
-        ``base`` = the version its rewritten file set was read from: an
-        append/delete retry is safe to replay on a newer HEAD (its files
-        just extend whatever is there), but replaying a REPLACE on a HEAD
-        it never read would silently erase the concurrently committed
-        data — a lost update. Iceberg's rewrite_data_files validates the
-        same way and fails the rewrite; here that surfaces as
-        CommitConflict so the caller re-reads and re-compacts.
-        ``ddl`` stamps the snapshot with a schema other than the current
-        one (schema-evolution commits pass the NEW ddl; table metadata on
-        disk is only updated after the commit lands)."""
+        """Snapshot commit of staged data dirs and delete entries,
+        published through ``_publish`` (a lost race replays on the new
+        HEAD). ``replace=True`` commits the given file set INSTEAD of
+        extending the parent's (rewrite/compaction semantics). A replace
+        MUST pass ``base`` = the version its rewritten file set was read
+        from: an append/delete retry is safe to replay on a newer HEAD
+        (its files just extend whatever is there), but replaying a
+        REPLACE on a HEAD it never read would silently erase the
+        concurrently committed data — a lost update. Iceberg's
+        rewrite_data_files validates the same way and fails the rewrite;
+        here that surfaces as CommitConflict so the caller re-reads and
+        re-compacts. ``ddl`` stamps the snapshot with a schema other
+        than the current one (schema-evolution commits pass the NEW ddl;
+        table metadata on disk is only updated after the commit lands)."""
+        # Refuse before the footer pass: it deletes empty part files
+        # from the caller's staged dirs.
+        if replace and base is None:
+            raise ValueError("replace commit requires base version")
         entry_ddl = self.ddl if ddl is None else ddl
         # Bounds are a property of the staged files, not of the snapshot
         # version — compute ONCE, outside the CAS retry loop, in one
         # distributed job over every staged dir of this commit.
         bounds_by_dir, rows_by_dir = self._collect_bounds_many(data_files)
-        for _ in range(retries):
-            head = self.current_version()
-            if replace and base is None:
-                raise ValueError("replace commit requires base version")
-            # A commit pinned to ``base`` must land exactly on it: a
-            # replace replayed on a newer HEAD would erase concurrent
-            # data, and a fast-forward would silently merge divergent
-            # histories. Both surface as CommitConflict instead.
-            if base is not None and head != base:
-                raise CommitConflict(
-                    f"commit read v{base} but HEAD is now v{head} in "
-                    f"{self.root}: concurrent commit; re-read and retry"
-                )
-            snap = self.snapshot(head)
+
+        def build(head: int, snap: dict) -> dict:
             # Every file entry carries the sequence (= version) that
             # committed it: the read path scopes equality deletes to
             # strictly-older data files, Iceberg's sequence-number rule
@@ -604,11 +644,8 @@ class LakeTable:
                 for p in data_files
             ]
             new_dels = [{"entry": d, "seq": seq} for d in delete_files]
-            entry = {
-                "version": seq,
-                "parent": head,
-                "ts": time.time(),  # commit wall time (AS OF TIMESTAMP)
-                "ddl": entry_ddl,  # the schema this snapshot serves
+            return {
+                "ddl": entry_ddl,
                 "data_files": (
                     new_data if replace else snap["data_files"] + new_data
                 ),
@@ -619,22 +656,8 @@ class LakeTable:
                 ),
                 "summary": summary,
             }
-            tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = self._snap_file(head + 1)
-            if os.path.exists(target):  # lost the race before rename
-                os.unlink(tmp)
-                continue
-            try:
-                # atomic on POSIX; fails/overwrites are the conflict signal
-                os.link(tmp, target)
-                os.unlink(tmp)
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
-            return head + 1
-        raise CommitConflict(f"commit lost {retries} races in {self.root}")
+
+        return self._publish(build, base=base, retries=retries)["version"]
 
     # -- write path ----------------------------------------------------------
     def stage_append(self, df: DataFrame) -> str:
@@ -945,9 +968,10 @@ class LakeTable:
         residual scan opens ONLY the boundary files. The CAS loop
         replans from HEAD on every retry, so a racing append's new
         files are never silently dropped."""
-        for _ in range(5):
-            head = self.current_version()
-            snap = self.snapshot(head)
+        delete_dir = None
+
+        def build(head: int, snap: dict) -> dict:
+            nonlocal delete_dir
             new_files: list[dict] = []
             dropped = 0
             partial: list[dict] = []  # entries restricted to boundary files
@@ -1027,48 +1051,31 @@ class LakeTable:
                         "seq": head + 1,
                     }
                 )
-            summary = {
-                "operation": "delete-aligned",
-                "col": col,
-                "lo": lo,
-                "hi": hi,
-                "files_dropped": dropped,
-                "files_partial": n_partial,
-                "metadata_only": n_partial == 0,
-            }
-            entry = {
-                "version": head + 1,
-                "parent": head,
-                "ts": time.time(),
+            return {
                 "ddl": snap.get("ddl", self.ddl),
                 "data_files": new_files,
                 "delete_files": new_dels,
-                "summary": summary,
+                "summary": {
+                    "operation": "delete-aligned",
+                    "col": col,
+                    "lo": lo,
+                    "hi": hi,
+                    "files_dropped": dropped,
+                    "files_partial": n_partial,
+                    "metadata_only": n_partial == 0,
+                },
             }
-            tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            target = self._snap_file(head + 1)
 
-            def _lost_race() -> None:
-                # reclaim the now-stale residual delete dir immediately
-                # instead of leaving it for the orphan-grace sweep; the
-                # next iteration replans boundary files from the new HEAD
-                os.unlink(tmp)
-                if delete_dir is not None:
-                    shutil.rmtree(delete_dir, ignore_errors=True)
+        def reclaim() -> None:
+            # a lost race makes this attempt's residual delete dir
+            # stale: reclaim it now instead of leaving it for the
+            # orphan-grace sweep; the next attempt replans boundary
+            # files from the new HEAD
+            if delete_dir is not None:
+                shutil.rmtree(delete_dir, ignore_errors=True)
 
-            if os.path.exists(target):
-                _lost_race()
-                continue
-            try:
-                os.link(tmp, target)
-                os.unlink(tmp)
-            except FileExistsError:
-                _lost_race()
-                continue
-            return head + 1, summary
-        raise CommitConflict(f"delete_range lost 5 races in {self.root}")
+        entry = self._publish(build, op="delete_range", on_lost=reclaim)
+        return entry["version"], entry["summary"]
 
     def add_column(self, name: str, dtype: str) -> int:
         """Schema evolution: append a nullable column (Iceberg
@@ -1406,42 +1413,25 @@ class LakeTable:
         the MoR masking structure) replays exactly while history stays
         append-only: the bad snapshots remain time-travelable for the
         post-incident audit, and the rollback itself can be rolled
-        back. Pure metadata: zero data files are read or written; the
-        CAS loop is the _commit pattern (a concurrent commit wins the
-        version slot and the rollback retries on the new HEAD — a
-        rollback targets a VERSION, which a concurrent append does not
-        change)."""
+        back. Pure metadata: zero data files are read or written; a
+        concurrent commit that wins the version slot makes the rollback
+        retry on the new HEAD (a rollback targets a VERSION, which a
+        concurrent append does not change)."""
         old = self.snapshot(version)  # raises if expired/unknown
         old_ddl = old.get("ddl", self.ddl)
-        for _ in range(5):
-            head = self.current_version()
-            entry = {
-                "version": head + 1,
-                "parent": head,
-                "ts": time.time(),
+        v = self._publish(
+            lambda head, snap: {
                 "ddl": old_ddl,
                 "data_files": old["data_files"],
                 "delete_files": old["delete_files"],
                 "summary": {"operation": "rollback", "to": version},
-            }
-            tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = self._snap_file(head + 1)
-            if os.path.exists(target):
-                os.unlink(tmp)
-                continue
-            try:
-                os.link(tmp, target)
-                os.unlink(tmp)
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
-            if old_ddl != self.ddl:  # schema rolls back too
-                self.ddl = old_ddl
-                self._write_meta()
-            return head + 1
-        raise CommitConflict(f"rollback lost 5 races in {self.root}")
+            },
+            op="rollback",
+        )["version"]
+        if old_ddl != self.ddl:  # schema rolls back too
+            self.ddl = old_ddl
+            self._write_meta()
+        return v
 
     def cherrypick_snapshot(self, version: int) -> int:
         """Iceberg's ``cherrypick_snapshot``: re-apply ONE snapshot's
@@ -1591,10 +1581,7 @@ class LakeTable:
             merged.append(entry)
         if n_in == 0:
             return head  # nothing to consolidate: no version minted
-        new = {
-            "version": head + 1,
-            "parent": head,
-            "ts": time.time(),
+        body = {
             "ddl": snap.get("ddl", self.ddl),
             "data_files": merged + passthrough,
             "delete_files": [dict(d) for d in snap["delete_files"]],
@@ -1604,20 +1591,9 @@ class LakeTable:
                 "merged_to": n_out,
             },
         }
-        tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(new, f)
-        target = self._snap_file(head + 1)
-        try:
-            os.link(tmp, target)
-            os.unlink(tmp)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise CommitConflict(
-                f"rewrite_manifests read v{head} but v{head + 1} landed "
-                f"concurrently in {self.root}: re-read and retry"
-            )
-        return head + 1
+        return self._publish(
+            lambda h, s: body, base=head, op="rewrite_manifests"
+        )["version"]
 
     def _zvalue(self, df: DataFrame, cols: list[str], bits: int = 16):
         """Z-order key: min-max normalize each column to a ``bits``-wide
@@ -2301,8 +2277,6 @@ class LakeTable:
                     continue
                 if p not in dead and os.path.getmtime(p) > cutoff:
                     continue  # untracked + recent: possibly staged
-                import shutil
-
                 shutil.rmtree(p, ignore_errors=True)
                 removed += 1
         return {"expired_versions": expired, "removed_dirs": removed}
@@ -2487,10 +2461,7 @@ class LakeTable:
                 "seq": max(s for s, _ in pos_entries),
             }
         )
-        new = {
-            "version": head + 1,
-            "parent": head,
-            "ts": time.time(),
+        body = {
             "ddl": snap.get("ddl", self.ddl),
             "data_files": [dict(f) for f in snap["data_files"]],
             "delete_files": keep_dels,
@@ -2500,21 +2471,11 @@ class LakeTable:
                 "merged_to": 1,
             },
         }
-        tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(new, f)
-        target = self._snap_file(head + 1)
-        try:
-            os.link(tmp, target)
-            os.unlink(tmp)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise CommitConflict(
-                f"rewrite_position_delete_files read v{head} but "
-                f"v{head + 1} landed concurrently in {self.root}: "
-                f"re-read and retry"
-            )
-        return head + 1
+        return self._publish(
+            lambda h, s: body,
+            base=head,
+            op="rewrite_position_delete_files",
+        )["version"]
 
     def read_incremental(self, from_version: int, to_version: int) -> DataFrame:
         """Incremental scan: rows APPENDED after `from_version` up to

@@ -9,16 +9,24 @@
   the Iceberg older_than refusal and dry_run;
 - rewrite_position_delete_files compacts N positional delete files
   into one, preserving sequence scoping (read row-identical) and
-  pruning dangling rows.
+  pruning dangling rows;
+- every verb that mints a version writes the same snapshot entry
+  shape, and a lost CAS race makes rollback retry and the HEAD-pinned
+  rewrites refuse.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
-from iceberg_playground_spark.tables import LakeCatalog
+from iceberg_playground_spark.tables import (
+    BatchedCommitter,
+    CommitConflict,
+    LakeCatalog,
+)
 
 DDL = "k BIGINT, par BIGINT"
 
@@ -200,3 +208,97 @@ def test_rewrite_lone_dangling_entry(catalog, spark):
     assert sorted(tuple(r) for r in t.read().collect()) == before
     # second call: lone entry, nothing dangling now — refuse
     assert t.rewrite_position_delete_files() == v
+
+
+def _publish_lifecycle(t, spark) -> list[str]:
+    """One pass over every verb that mints a version, in an order where
+    each one has work to do. Returns the operations in commit order."""
+    _two_file_append(t, spark, range(0, 20))
+    c = BatchedCommitter(t, interval_s=3600)
+    for a in (20, 30):
+        c.add(t.stage_append(_rows(spark, range(a, a + 10)).coalesce(1)))
+    c.flush()  # two same-seq entries for rewrite_manifests to merge
+    t.rewrite_manifests()
+    t.delete_where("k = 3", ["k"])
+    t.delete_where_positional("k IN (4, 5)")
+    t.delete_where_positional("k = 6")
+    t.rewrite_position_delete_files()
+    t.delete_range("k", 8, 9)  # partial overlap: residual delete dir
+    t.upsert(_rows(spark, [10, 40]).coalesce(1), ["k"])
+    t.rollback(t.current_version() - 1)
+    t.create_tag("pre-evolution")
+    t.add_column("note", "STRING")
+    t.compact(target_files=1)
+    t.create_branch("audit")
+    t.append_to_branch("audit", _rows(spark, [50]).coalesce(1))
+    t.fast_forward("audit")
+    return [
+        t.snapshot(v)["summary"]["operation"] for v in t.versions()
+    ]
+
+
+def test_snapshot_format_contract(catalog, spark):
+    # every verb that mints a version writes the same entry shape,
+    # chained parent -> version with no gaps
+    t = catalog.create_table("m", "contract", DDL, drop_if_exists=True)
+    ops = _publish_lifecycle(t, spark)
+    assert ops == [
+        "append", "append", "rewrite-manifests", "delete", "delete-pos",
+        "delete-pos", "rewrite-position-deletes", "delete-aligned",
+        "upsert", "rollback", "add-column", "compact", "fast-forward",
+    ]
+    snap_dir = os.path.join(t.root, "snapshots")
+    names = sorted(os.listdir(snap_dir))
+    assert names == [f"v{v:08d}.json" for v in range(1, len(ops) + 1)]
+    for v, fn in enumerate(names, start=1):
+        with open(os.path.join(snap_dir, fn)) as f:
+            entry = json.load(f)
+        assert set(entry) == {
+            "version", "parent", "ts", "ddl",
+            "data_files", "delete_files", "summary",
+        }
+        assert entry["version"] == v
+        assert entry["parent"] == v - 1
+
+
+@pytest.mark.parametrize(
+    "verb", ["rollback", "rewrite_manifests", "rewrite_position_delete_files"]
+)
+def test_publish_lost_race(catalog, spark, monkeypatch, verb):
+    # one lost CAS race: rollback retries and lands on the next
+    # version; the rewrites are pinned to the HEAD they read, so they
+    # refuse with CommitConflict and HEAD stays put
+    t = catalog.create_table("m", f"race_{verb}", DDL, drop_if_exists=True)
+    staged = [
+        t.stage_append(_rows(spark, range(a, a + 10)).coalesce(1))
+        for a in (0, 10)
+    ]
+    t._commit(staged, [], {"operation": "append", "added": 2})  # v1
+    target_rows = sorted(tuple(r) for r in t.read().collect())
+    t.delete_where_positional("k < 2")  # v2
+    t.delete_where_positional("k = 15")  # v3
+    head = t.current_version()
+
+    real_link = os.link
+    fails = {"n": 1}
+
+    def flaky_link(src, dst, *a, **kw):
+        if fails["n"] and os.sep + "snapshots" + os.sep in dst:
+            fails["n"] -= 1
+            raise FileExistsError(dst)
+        return real_link(src, dst, *a, **kw)
+
+    monkeypatch.setattr("os.link", flaky_link)
+    if verb == "rollback":
+        assert t.rollback(1) == head + 1
+        assert sorted(tuple(r) for r in t.read().collect()) == target_rows
+    else:
+        with pytest.raises(CommitConflict, match="landed concurrently"):
+            getattr(t, verb)()
+        assert t.current_version() == head
+    assert fails["n"] == 0  # the race was actually lost once
+    leftovers = [
+        f for f in os.listdir(os.path.join(t.root, "snapshots"))
+        if ".tmp." in f
+    ]
+    assert leftovers == []

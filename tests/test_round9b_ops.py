@@ -782,3 +782,21 @@ def test_c54_quantized_cache_knob_both_branches(spark, monkeypatch):
         for r in df.collect()
     )
     assert rows(qdf_off) == rows(qdf_on)
+
+
+@pytest.mark.parametrize("layout", ["file", "directory", "missing"])
+def test_qdf_source_bytes_reads_data_size(tmp_path, layout):
+    # the cache gate compares DATA bytes: a directory dataset sums its
+    # part files (recursively, through partition dirs) instead of
+    # reporting the directory inode's size; a missing source reads 0
+    import iceberg_playground_spark.queries.round9b as r9b
+
+    src = tmp_path / "embeddings.parquet"
+    if layout == "file":
+        src.write_bytes(b"x" * 5000)
+    elif layout == "directory":
+        (src / "k=1").mkdir(parents=True)
+        (src / "part-0.parquet").write_bytes(b"x" * 3000)
+        (src / "k=1" / "part-1.parquet").write_bytes(b"x" * 2000)
+    expected = 0 if layout == "missing" else 5000
+    assert r9b._qdf_source_bytes(str(tmp_path)) == expected

@@ -353,6 +353,26 @@ def test_compact_conflicts_instead_of_erasing_concurrent_commit(
     assert t.read().count() == 6
 
 
+def test_replace_without_base_refused_before_footer_pass(catalog, spark):
+    # the refusal must fire before the footer pass, which deletes empty
+    # part files from the staged dirs it reads
+    import os
+    import shutil
+
+    t = _table(catalog, spark)  # v1
+    staged = t.stage_append(spark.createDataFrame(ROWS, DDL).coalesce(1))
+    empty = t.stage_append(spark.createDataFrame([], DDL).coalesce(1))
+    (part,) = [f for f in os.listdir(empty) if f.endswith(".parquet")]
+    shutil.copy(
+        os.path.join(empty, part), os.path.join(staged, "empty-" + part)
+    )
+    before = sorted(os.listdir(staged))
+    with pytest.raises(ValueError, match="requires base"):
+        t._commit([staged], [], {"operation": "compact"}, replace=True)
+    assert sorted(os.listdir(staged)) == before
+    assert t.current_version() == 1
+
+
 def test_schema_metadata_published_only_after_commit(
     catalog, spark, monkeypatch
 ):
